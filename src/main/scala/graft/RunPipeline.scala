@@ -14,9 +14,9 @@ import graft.sources.{Loaders, Sources}
   *
   * Usage: runMain graft.RunPipeline <inputDir> <outputDir> [whitelistJson]
   *
-  * inputDir layout (names fixed; JSON = newline-delimited with the explicit
-  * Schemas.* StructTypes — no inference pass; studies/predictions are
-  * parquet as in the reference, sc:205-209):
+  * inputDir layout (names fixed; every input is read with its explicit
+  * Schemas.* StructType — no inference pass; JSON = newline-delimited;
+  * studies/predictions are parquet as in the reference, sc:205-209):
   *   drugs.json targets.json diseases.json evidences.json interactions.json
   *   faers_by_drug.json faers_by_target.json aggregations.json
   *   studies.parquet predictions.parquet
@@ -39,8 +39,10 @@ object RunPipeline {
     val faersDrugRaw = j("faers_by_drug", Schemas.faersByDrug)
     val faersTargetRaw = j("faers_by_target", Schemas.faersByTarget)
     val aggregationsRaw = j("aggregations", Schemas.aggregations)
-    val studies = Sources.parquet(spark, s"$inDir/studies.parquet")
-    val predictions = Sources.parquet(spark, s"$inDir/predictions.parquet")
+    val studies = Sources.parquet(spark, s"$inDir/studies.parquet",
+      Some(Schemas.studies))
+    val predictions = Sources.parquet(spark, s"$inDir/predictions.parquet",
+      Some(Schemas.predictions))
 
     val targets = Loaders.targets(targetsRaw)
     val evidences = Loaders.literatureEvidences(evidencesRaw)
@@ -66,9 +68,13 @@ object RunPipeline {
           .filter(p => new java.io.File(p).isFile),
         Schemas.expression).map(Loaders.expression))
 
+    // associations comes back cached: the parquet write fills the cache,
+    // the JSON sink reads it
     val (associations, drugDisease) = DrugDisease.run(inputs)
-    Sources.writeParquet(associations, s"$outDir/associations")
-    Sources.writeJson(drugDisease, s"$outDir/drug_disease")
+    try {
+      Sources.writeParquet(associations, s"$outDir/associations")
+      Sources.writeJson(drugDisease, s"$outDir/drug_disease")
+    } finally associations.unpersist()
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Graph, Scoring}
 
@@ -9,14 +10,15 @@ import graft.ops.{Graph, Scoring}
   *
   * Input column contracts are the reference's loader projections
   * (platformDataBackendDrugDiseaseSimilarity.sc:15-289); every stage is pure
-  * plan composition — nothing executes until a sink action. Caches are placed
-  * at exactly the multi-consumer nodes (the reference missed two: `evs` and
-  * `associations`, re-computed per sink — SURVEY §3.2).
+  * plan composition — nothing executes until a sink action. The one sub-plan
+  * with two consumers is the decorated `associations` frame both sinks read
+  * (the reference re-computed it per sink — SURVEY §3.2); it is the one
+  * cache.
   *
   * Scale notes per stage are inline; the pipeline's wide stages are the
   * adjacency groupBy, the association groupBy (bounded by top-K slice), the
-  * pivot (explicit value list — no distinct-values driver job), and the
-  * bundle joins (dimension sides broadcast-eligible).
+  * per-evidence score window, and the bundle joins (dimension sides
+  * broadcast-eligible).
   */
 object DrugDisease {
 
@@ -49,8 +51,11 @@ object DrugDisease {
     * therapeutic areas, bundle-derived aggregates, hypotheses and the two
     * AE containment sub-scores.
     *
-    * Both outputs share one cached score plan — the reference recomputed
-    * the whole DAG for its second sink (SURVEY §3.2).
+    * The fork is the decorated associations frame: it is returned cached,
+    * the first sink written fills the cache, and the drugDisease frame
+    * reads it back and adds only the hypothesis scoring — the reference
+    * recomputed the whole DAG for its second sink (SURVEY §3.2). The caller
+    * unpersists the associations frame once both sinks are written.
     */
   def run(in: Inputs): (DataFrame, DataFrame) = {
     // With expression data, the network keeps only tissue-co-active edges
@@ -58,12 +63,10 @@ object DrugDisease {
     // requires the expression input, so absence is a documented relaxation.
     val lut = in.expression.foldLeft(networkLut(in.ppiEdges, in.genesLut))(
       tissueFilteredLut)
-    val scores = evidenceScores(
-      in.evidences.select(col("evs_id"), col("datasource"), col("score")),
+    val evs = evidenceScores(
+      in.evidences.select(col("evs_id"), col("target_id"), col("disease_id"),
+        col("datasource"), col("score")),
       Seq("genetics", "europepmc"))
-    val evs = in.evidences
-      .select(col("evs_id"), col("target_id"), col("disease_id"))
-      .join(scores, Seq("evs_id"))
     val whitelistMode = in.whitelist.isDefined
     val keyed = in.whitelist match {
       case Some(wl) =>
@@ -78,7 +81,6 @@ object DrugDisease {
     val assoc = makeAssociations(
       propagated, Seq(col("target_id"), col("assoc_disease_id").as("disease_id")),
       threshold = if (whitelistMode) None else Some(0.1))
-      .cache()
 
     // The reference's two dimension frames (sc:427-428): disease dim ⟕
     // drug-bundle-per-disease, target dim ⟕ drug-bundle-per-target ⟕
@@ -106,11 +108,13 @@ object DrugDisease {
     // null drugs_for_target bundle yields null new_drugs, dropped by the
     // open-mode gate / kept null in whitelist mode — the reference's exact
     // row set without its size(null) = -1 sentinel (see aeContainment).
+    // Both sinks read it, so it is the cache.
     val associations = newDrugs(
       assocByDisease
         .join(dfT, Seq("target_id"))
         .join(dfD, Seq("disease_id")),
       dropEmpty = !whitelistMode)
+      .cache()
     // The JSON sink projection (sc:478-494): names, therapeutic areas, the
     // bundle-derived disease AE profile (null-safe at both array levels —
     // the reference's unguarded flatten nulls the whole profile when ONE
@@ -203,18 +207,22 @@ object DrugDisease {
     withAnc.join(desc, Seq("id"))
   }
 
-  /** Per-evidence source scores (sc:433-437): pivot datasource → one column
-    * per source, missing → 0. Explicit value list skips the distinct-values
-    * driver job the reference paid for.
+  /** Per-evidence source scores (sc:433-437): one column per source holding
+    * the evidence's score from that source, missing → 0, on every row of
+    * the evidence. One window over evs_id computes them in the evidence
+    * scan itself: no second scan to join a per-evidence pivot back to.
+    * Explicit source list — no distinct-values driver job.
     *
-    * evidences: (evs_id, datasource, score). Output: (evs_id, <src>...).
+    * evidences: (evs_id, datasource, score, …). Output: every input row and
+    * column, plus <src>... .
     */
-  def evidenceScores(evidences: DataFrame, datasources: Seq[String]): DataFrame =
-    evidences
-      .groupBy(col("evs_id"))
-      .pivot("datasource", datasources)
-      .agg(first(col("score")))
-      .na.fill(0.0)
+  def evidenceScores(evidences: DataFrame, datasources: Seq[String]): DataFrame = {
+    val byEvidence = Window.partitionBy(col("evs_id"))
+    evidences.select(col("*") +: datasources.map(src => coalesce(
+      first(when(col("datasource") === src, col("score")), ignoreNulls = true)
+        .over(byEvidence),
+      lit(0.0)).as(src)): _*)
+  }
 
   /** 1-hop reflexive propagation (sc:448-450, 462-464): each evidence row
     * fans out to the target's neighbourhood ∪ {itself}. neighbours side comes

@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.StructType
   * The reference inferred every JSON schema (12 call sites, sc:15-378) —
   * a full extra pass over each input. We require an explicit StructType:
   * deterministic types, no inference job, and corrupt-record capture become
-  * possible. Parquet keeps footer-driven schema (vectorized reader).
+  * possible. Parquet takes an optional StructType: without one the schema
+  * comes from the file footers, read by a driver job before the scan plans.
   */
 object Sources {
 
@@ -44,9 +45,13 @@ object Sources {
     (clean, bad, cached)
   }
 
-  /** S2/S3 — parquet scan; Hadoop glob patterns in `path` expand natively. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** S2/S3 — parquet scan; Hadoop glob patterns in `path` expand natively.
+    * With a `schema` the scan skips the footer schema-inference job and
+    * reads the named columns by name.
+    */
+  def parquet(spark: SparkSession, path: String,
+              schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(path)
 
   /** CSV scan with explicit schema (no inference pass; header optional).
     * `multiLine` parses quoted fields containing embedded newlines

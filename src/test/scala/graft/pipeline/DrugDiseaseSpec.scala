@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Reference-pipeline semantics on tiny literal frames: the traps listed in
@@ -35,15 +35,64 @@ class DrugDiseaseSpec extends SparkSpec {
     assert(ont("D0") == ((Set("D0"), Seq("D0", "D1"))))
   }
 
-  test("evidenceScores pivots with explicit values and fills missing with 0") {
+  private val sources = Seq("genetics", "europepmc")
+
+  test("evidenceScores keeps every row and fills missing sources with 0") {
     val evs = Seq(
       ("e1", "genetics", 0.5), ("e1", "europepmc", 0.3), ("e2", "genetics", 0.2)
     ).toDF("evs_id", "datasource", "score")
-    val scores = DrugDisease.evidenceScores(evs, Seq("genetics", "europepmc"))
-      .as[(String, Double, Double)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(scores("e1") == ((0.5, 0.3)))
-    assert(scores("e2") == ((0.2, 0.0)))
+    val scores = DrugDisease.evidenceScores(evs, sources)
+      .select(col("evs_id"), col("genetics"), col("europepmc"))
+      .as[(String, Double, Double)].collect().sorted.toSeq
+    assert(scores == Seq(("e1", 0.5, 0.3), ("e1", 0.5, 0.3), ("e2", 0.2, 0.0)))
+  }
+
+  test("evidenceScores: a null score fills as 0.0") {
+    val evs = Seq(("e1", "genetics", None), ("e2", "europepmc", Some(0.4)))
+      .toDF("evs_id", "datasource", "score")
+    val scores = DrugDisease.evidenceScores(evs, sources)
+      .select(col("evs_id"), col("genetics"), col("europepmc"))
+      .as[(String, Double, Double)].collect().toSet
+    assert(scores == Set(("e1", 0.0, 0.0), ("e2", 0.0, 0.4)))
+  }
+
+  test("evidenceScores: an evs_id with both sources keeps both rows") {
+    val evs = Seq(("e1", "genetics", 0.5), ("e1", "europepmc", 0.3))
+      .toDF("evs_id", "datasource", "score")
+    val rows = DrugDisease.evidenceScores(evs, sources)
+      .as[(String, String, Double, Double, Double)].collect().sortBy(_._2).toSeq
+    // each input row passes through whole, with both sources' scores added
+    assert(rows == Seq(
+      ("e1", "europepmc", 0.3, 0.5, 0.3),
+      ("e1", "genetics", 0.5, 0.5, 0.3)))
+  }
+
+  test("evidenceScores equals the pivot joined back to the evidence rows") {
+    val evs = Seq[(String, String, String, String, Option[Double])](
+      ("e1", "T1", "D1", "genetics", Some(0.5)),
+      ("e1", "T1", "D1", "europepmc", Some(0.3)),
+      ("e2", "T1", "D2", "genetics", Some(0.2)),
+      ("e3", "T2", "D1", "europepmc", Some(0.9)),
+      ("e4", "T2", "D2", "genetics", None),
+      ("e5", "T3", "D1", "chembl", Some(0.7)),
+      ("e6", "T3", "D2", "europepmc", Some(0.1)),
+      ("e6", "T3", "D2", "chembl", Some(0.6))
+    ).toDF("evs_id", "target_id", "disease_id", "datasource", "score")
+    // the form evidenceScores replaced, verbatim: pivot per evs_id, joined
+    // back to a second read of the evidence rows
+    val pivot = evs.select(col("evs_id"), col("datasource"), col("score"))
+      .groupBy(col("evs_id"))
+      .pivot("datasource", sources)
+      .agg(first(col("score")))
+      .na.fill(0.0)
+    val old = evs.select(col("evs_id"), col("target_id"), col("disease_id"))
+      .join(pivot, Seq("evs_id"))
+    val cols = Seq("evs_id", "target_id", "disease_id", "genetics", "europepmc").map(col)
+    def rows(df: DataFrame) =
+      df.select(cols: _*).as[(String, String, String, Double, Double)].collect().sorted.toSeq
+    val expected = rows(old)
+    assert(expected.length == evs.count())
+    assert(rows(DrugDisease.evidenceScores(evs, sources)) == expected)
   }
 
   test("propagate fans each evidence to neighbourhood plus self") {

@@ -1,8 +1,14 @@
 package graft.pipeline
 
 import graft.{RunPipeline, SparkSpec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** The full binary path (graft.RunPipeline.execute): schema'd JSON/parquet
   * inputs on disk → loaders → DrugDisease.run → the reference's two sinks
@@ -49,10 +55,54 @@ class RunPipelineBinarySpec extends SparkSpec {
     dir
   }
 
+  /** Runs `body` and returns the executed plans of the first `n` queries
+    * it runs, in completion order. Listener events arrive on the listener
+    * bus thread, so this waits for them.
+    */
+  private def plansOf(n: Int)(body: => Unit): Seq[SparkPlan] = {
+    val seen = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.size >= n, s"saw ${seen.size} of $n query plans")
+    seen.asScala.toSeq.take(n)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper {
+    /** Every node of `plan` through its adaptive stages; `cached` also
+      * walks the plan that fills each cached relation it reads.
+      */
+    def nodes(plan: SparkPlan, cached: Boolean): Seq[SparkPlan] = {
+      val own = collect(plan) { case p => p }
+      if (!cached) own
+      else own ++ own.flatMap {
+        case s: InMemoryTableScanExec => nodes(s.relation.cachedPlan, cached)
+        case _ => Nil
+      }
+    }
+
+    /** File names scanned by `nodes`, once per scan. */
+    def scans(nodes: Seq[SparkPlan]): Seq[String] = nodes.flatMap {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+      case _ => Nil
+    }
+  }
+
   test("open mode: binary writes associations parquet and drug_disease JSON") {
     val in = writeWorld()
     val out = Files.createTempDirectory("graft-out").toString
+    spark.catalog.clearCache()
     RunPipeline.execute(spark, in, out, whitelistPath = None)
+    // the frame both sinks read is cached for the run and released after it
+    assert(spark.sharedState.cacheManager.isEmpty)
 
     val assoc = spark.read.parquet(s"$out/associations")
       .select(col("target_id"), col("disease_id"), col("evidence_count"), col("harmonic"))
@@ -94,7 +144,9 @@ class RunPipelineBinarySpec extends SparkSpec {
   test("whitelist mode: optional source switches keying; sinks still materialize") {
     val in = writeWorld()
     val out = Files.createTempDirectory("graft-out-wl").toString
+    spark.catalog.clearCache()
     RunPipeline.execute(spark, in, out, whitelistPath = Some(s"$in/whitelist.json"))
+    assert(spark.sharedState.cacheManager.isEmpty)
 
     val assocKeys = spark.read.parquet(s"$out/associations")
       .select(col("whitelist_id"), col("disease_id")).distinct()
@@ -107,5 +159,23 @@ class RunPipelineBinarySpec extends SparkSpec {
       .as[(String, String, String, Double)].collect().toSet
     // member disease D1 recovered from W1; both propagated targets score
     assert(scored == Set(("D1", "T1", "d2", 0.8), ("D1", "T2", "d2", 0.8)))
+  }
+
+  test("drug_disease sink reads the cached associations, both modes") {
+    val in = writeWorld()
+    for (whitelist <- Seq(None, Some(s"$in/whitelist.json"))) {
+      val out = Files.createTempDirectory("graft-out-plans").toString
+      val Seq(assocSink, ddSink) = plansOf(2)(RunPipeline.execute(spark, in, out, whitelist))
+      // the JSON sink's own plan reads the cache and the faers_by_drug LUT,
+      // no other input
+      val ddOwn = Plans.nodes(ddSink, cached = false)
+      assert(ddOwn.exists(_.isInstanceOf[InMemoryTableScanExec]), ddSink)
+      assert(Plans.scans(ddOwn).toSet == Set("faers_by_drug.json"), ddSink)
+      // evidence scores need no second evidence scan: one per sink, the
+      // cache fill included
+      for (sink <- Seq(assocSink, ddSink))
+        assert(Plans.scans(Plans.nodes(sink, cached = true))
+          .count(_ == "evidences.json") == 1, sink)
+    }
   }
 }
