@@ -1,32 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan audit: one line per query summarizing the physical plan — join
   * strategies, exchange count, scan pushdown — to spot the plans that need
   * iteration (SMJ on a dimension table, missing pushdown, accidental
-  * cartesian). Run: `runMain graft.PlanAudit [sfDir]`.
+  * cartesian). WindowNoPartition counts window operators with no
+  * PARTITION BY — each one pulls its whole input into a single task (the
+  * source of Spark's "No Partition Defined for Window operation" warning).
+  * Run: `runMain graft.PlanAudit [sfDir]`.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // object-agg sort fallback stays at Spark's spill-safe default;
-      // bounded-buffer udafs get hash mode per-operator via the
-      // BoundedAggFallback query-stage prep rule (GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val qe = fn(spark, sfDir).queryExecution
+        val plan = qe.executedPlan.toString
+        val windowNoPartition = qe.sparkPlan.collect {
+          case w: WindowExec if w.partitionSpec.isEmpty => w
+        }.size
         def n(s: String) = plan.sliding(s.length).count(_ == s)
         val flags = Seq(
           "BroadcastHashJoin" -> n("BroadcastHashJoin"),
@@ -36,7 +31,8 @@ object PlanAudit {
           "Cartesian" -> n("CartesianProduct"),
           "Exchange" -> n("Exchange "),
           "PushedFilters≠[]" -> n("PushedFilters: ["),
-          "WSCodegen" -> n("WholeStageCodegen")
+          "WSCodegen" -> n("WholeStageCodegen"),
+          "WindowNoPartition" -> windowNoPartition
         ).collect { case (k, v) if v > 0 => s"$k=$v" }
         println(s"AUDIT $name :: ${flags.mkString(" ")}")
       } catch {

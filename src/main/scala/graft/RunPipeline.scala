@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.DrugDisease
 import graft.schema.Schemas
@@ -20,8 +21,9 @@ import graft.sources.{Loaders, Sources}
   *   drugs.json targets.json diseases.json evidences.json interactions.json
   *   faers_by_drug.json faers_by_target.json aggregations.json
   *   studies.parquet predictions.parquet
-  *   [expression.json — optional; when present the network LUT keeps only
-  *    tissue-co-active edges (sc:134-157)]
+  *   [expression.json — optional, a file or a Spark JSON directory; when
+  *    present the network LUT keeps only tissue-co-active edges
+  *    (sc:134-157)]
   */
 object RunPipeline {
 
@@ -62,10 +64,14 @@ object RunPipeline {
         .map(Loaders.whitelist),
       // the reference's main REQUIRES the expression input (sc:352, 367,
       // 370); here its absence skips the tissue edge filter instead of
-      // failing, so fixture worlds without expression data still run
+      // failing, so fixture worlds without expression data still run.
+      // Existence goes through the path's own filesystem: a Spark-written
+      // JSON directory and non-local URIs count as present.
       expression = Sources.optionalJson(spark,
-        Option(s"$inDir/expression.json")
-          .filter(p => new java.io.File(p).isFile),
+        Some(new Path(s"$inDir/expression.json"))
+          .filter(p =>
+            p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+          .map(_.toString),
         Schemas.expression).map(Loaders.expression))
 
     // associations comes back cached: the parquet write fills the cache,
@@ -80,19 +86,7 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: RunPipeline <inputDir> <outputDir> [whitelistJson]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // object-agg sort fallback stays at Spark's spill-safe default;
-      // bounded-buffer udafs get hash mode per-operator via the
-      // BoundedAggFallback query-stage prep rule (GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     try execute(spark, args(0), args(1), args.lift(2))
     finally spark.stop()

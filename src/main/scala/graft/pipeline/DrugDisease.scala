@@ -366,15 +366,11 @@ object DrugDisease {
     *
     * aeContainment is one direction — the fraction of `a` covered by `b`
     * (sc:503, 505) — and the JSON sink's two sub-score columns;
-    * aeSimilarity is the 0.4/0.6 blend.
+    * scoreHypotheses blends them 0.4/0.6.
     */
   def aeContainment(a: Column, b: Column): Column =
     when(size(a) > 0,
       lit(1.0) - size(array_except(a, b)).cast("double") / size(a).cast("double"))
-
-  def aeSimilarity(drugAes: Column, diseaseAes: Column): Column =
-    lit(0.4) * aeContainment(drugAes, diseaseAes) +
-      lit(0.6) * aeContainment(diseaseAes, drugAes)
 
   /** Hypothesis scoring (sc:496-511): explode hypotheses, join each
     * candidate drug's AE profile (broadcast LUT, the reference's cachedAEs),
@@ -397,8 +393,8 @@ object DrugDisease {
       .withColumn("disease_aes_score",
         aeContainment(col("disease_aes_from_drugs"), col("drug_hypothesis_aes")))
       .withColumn("drug_hypothesis_disease_aes_score",
-        (lit(0.4) * col("drug_hypothesis_aes_score") +
-          lit(0.6) * col("disease_aes_score")) / lit(1.0))
+        lit(0.4) * col("drug_hypothesis_aes_score") +
+          lit(0.6) * col("disease_aes_score"))
       .where(col("drug_hypothesis_disease_aes_score") > 0.0)
   }
 }

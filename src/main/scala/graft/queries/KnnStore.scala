@@ -1050,7 +1050,13 @@ object KnnStore {
     * point-read.
     */
   def occupancyAudit(s: SparkSession, root: String): DataFrame =
-    readMembers(s, root)
+    occupancy(readMembers(s, root))
+
+  /** Cell histogram figures of any (…, bucket) assignment, one row:
+    * (n_cells, n_members, sum_sq, max_cell).
+    */
+  def occupancy(assign: DataFrame): DataFrame =
+    assign
       .groupBy(col("bucket")).agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as("n_cells"), sum(col("c")).as("n_members"),
         sum(col("c") * col("c")).as("sum_sq"), max(col("c")).as("max_cell"))

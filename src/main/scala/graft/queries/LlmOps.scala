@@ -30,19 +30,12 @@ object LlmOps {
 
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to")
 
-  /** Named stage frames of q_text_passage_dfcap, exposed so graft.Probe
-    * can attribute its wall clock stage by stage. The r12 split CLEARED
-    * the r11 "superlinear at 1000×" weak: same-session, every stage grows
-    * 10-11× on 10× data whose own passage count grows 11.5× — the 21-31×
-    * figure was a cross-session protocol confound (SCALE.md r12). The
-    * registered query is exactly `passageDfcapPlan(s, d).topk` — one
-    * builder, no drift between what's probed and what ships.
+  /** Body of q_text_passage_dfcap. The r12 stage split CLEARED the r11
+    * "superlinear at 1000×" weak: same-session, every stage grows 10-11×
+    * on 10× data whose own passage count grows 11.5× — the 21-31× figure
+    * was a cross-session protocol confound (SCALE.md r12).
     */
-  private[graft] case class PassageDfcapPlan(
-      passages: DataFrame, tf: DataFrame, df: DataFrame, dl: DataFrame,
-      nl: DataFrame, qdf: DataFrame, scored: DataFrame, topk: DataFrame)
-
-  private[graft] def passageDfcapPlan(s: SparkSession, d: String): PassageDfcapPlan = {
+  private def passageDfcap(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stride = 192
     val sz = 256
@@ -94,14 +87,13 @@ object LlmOps {
       .orderBy(col("score_fp").desc, col("chunk_id"))
     val wQ = Window.partitionBy(col("query_id"))
       .orderBy(col("score_fp").desc, col("doc_id"))
-    val topk = scored
+    scored
       .withColumn("rd", row_number().over(wDoc))
       .where(col("rd") === 1)
       .withColumn("rn", row_number().over(wQ).cast("long"))
       .where(col("rn") <= 3)
       .select(col("query_id"), col("rn"), col("doc_id"),
         col("chunk_id"), col("score_fp"))
-    PassageDfcapPlan(passages, tf, df, dl, nl, qdf, scored, topk)
   }
 
   /** Marker-word profiles for the language-ID heuristic. */
@@ -1467,9 +1459,8 @@ object LlmOps {
     // df·4 ≤ N_passages query-side guard. The word-token original keeps
     // the degenerate-vocab regime on the record; this is the plan whose
     // candidate volume is Σ_t df(t) (passage-df-bounded) at any corpus
-    // size. Body lives in passageDfcapPlan so graft.Probe can time each
-    // stage of the same plan the query ships.
-    "q_text_passage_dfcap" -> ((s, d) => passageDfcapPlan(s, d).topk),
+    // size.
+    "q_text_passage_dfcap" -> ((s, d) => passageDfcap(s, d)),
 
     // TF-IDF keyword extraction: top-3 terms per doc by tf·idf with a
     // smoothed idf. tf is a map-side-partial hash agg on (doc, term); df

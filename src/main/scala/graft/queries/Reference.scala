@@ -620,8 +620,7 @@ object Reference {
 
   /** The gated pipeline: identical chain with the front-side
     * pair-evidence gate applied (see ddPairs). Registered as
-    * q_pipeline_dd_gated (its own oracle) AND used by the Probe
-    * pipelinegate lever measurement at 1000×.
+    * q_pipeline_dd_gated (its own oracle).
     */
   private[graft] def drugDiseasePipelineGated(
       s: SparkSession, d: String, minPairEvidence: Long): DataFrame =

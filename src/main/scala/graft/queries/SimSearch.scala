@@ -436,8 +436,7 @@ object SimSearch {
     assignTwoLevelAgainstStatic(e, trainedCentroidFrame(e, e.count(), occupancy))
 
   /** The training half of trainedAssign — sample, stand-ins, one Lloyd
-    * round, coarse flags — exposed so Probe can time train vs the corpus
-    * assign separately. Returns (cid, cv, is_coarse), E[C] = max(32,
+    * round, coarse flags. Returns (cid, cv, is_coarse), E[C] = max(32,
     * n/occupancy) rows. `occupancy` (default 64 — the registered/oracled
     * configuration) is the index-side recall/cost lever: fewer vectors
     * per cell ⇒ more cells ⇒ fewer candidates per probe.

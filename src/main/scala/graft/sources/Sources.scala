@@ -7,14 +7,17 @@ import org.apache.spark.sql.types.StructType
   *
   * The reference inferred every JSON schema (12 call sites, sc:15-378) —
   * a full extra pass over each input. We require an explicit StructType:
-  * deterministic types, no inference job, and corrupt-record capture become
-  * possible. Parquet takes an optional StructType: without one the schema
-  * comes from the file footers, read by a driver job before the scan plans.
+  * deterministic types, no inference job, and corrupt-record capture when
+  * the schema declares the column. Parquet takes an optional StructType:
+  * without one the schema comes from the file footers, read by a driver
+  * job before the scan plans.
   */
 object Sources {
 
-  /** S1 — newline-delimited JSON scan with explicit schema. Malformed rows
-    * land in `_corrupt_record` (PERMISSIVE) instead of poisoning the job.
+  /** S1 — newline-delimited JSON scan with explicit schema, PERMISSIVE.
+    * A malformed line lands in `columnNameOfCorruptRecord` only when
+    * `schema` declares that column (see `quarantine`); otherwise it reads
+    * back as an all-null row.
     */
   def json(spark: SparkSession, path: String, schema: StructType,
            columnNameOfCorruptRecord: String = "_corrupt_record"): DataFrame =

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Session
 
 /** Derives a larger testdata directory from a driver-generated one by
   * replicating every table `factor`× with per-copy decorrelation, for scale
@@ -48,16 +49,7 @@ object ScaleUp {
     val KeyOffset = if (stage == 1) 1000000000000L else 100000000000000L
     val ShiftDaysPerCopy = if (stage == 1) 64L else 6400L
     val SeedOff = if (stage == 1) 0 else 1024
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def raw(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

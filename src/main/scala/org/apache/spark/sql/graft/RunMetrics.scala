@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Runtime shuffle observability: measure what a job ACTUALLY moved, not
@@ -14,15 +14,20 @@ import org.apache.spark.sql.SparkSession
   * `listenerBus.waitUntilEmpty` (private[spark]), which makes the
   * snapshot deterministic instead of racing the async listener bus.
   *
-  * Test-harness quality gate, not a hot-path component: specs pin
-  * operator shuffle volumes with it (RunMetricsSpec), the way
-  * PlanShapeSpec pins plan shapes.
+  * Test-harness quality gate and profiler, not a hot-path component:
+  * specs pin operator shuffle volumes with it (RunMetricsSpec), the way
+  * PlanShapeSpec pins plan shapes, and graft.Profile prints one snapshot
+  * per query.
   */
 object RunMetrics {
 
-  /** Task-metric totals across every job that ran inside `measure`. */
+  /** Job count plus task-metric totals across every job that ran inside
+    * `measure`. `taskSeconds` sums task wall durations (launch to end).
+    */
   case class Snapshot(
+      jobs: Long,
       tasks: Long,
+      taskSeconds: Double,
       shuffleWriteBytes: Long,
       shuffleWriteRecords: Long,
       shuffleReadRecords: Long,
@@ -30,14 +35,19 @@ object RunMetrics {
       inputRecords: Long)
 
   private final class Fold extends SparkListener {
+    val jobs = new LongAdder
     val tasks = new LongAdder
+    val taskMillis = new LongAdder
     val swBytes = new LongAdder
     val swRecords = new LongAdder
     val srRecords = new LongAdder
     val spill = new LongAdder
     val input = new LongAdder
 
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
+
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      if (t.taskInfo != null) taskMillis.add(t.taskInfo.duration)
       val m = t.taskMetrics
       if (m != null) {
         tasks.increment()
@@ -49,8 +59,9 @@ object RunMetrics {
       }
     }
 
-    def snapshot: Snapshot = Snapshot(tasks.sum(), swBytes.sum(),
-      swRecords.sum(), srRecords.sum(), spill.sum(), input.sum())
+    def snapshot: Snapshot = Snapshot(jobs.sum(), tasks.sum(),
+      taskMillis.sum() / 1000.0, swBytes.sum(), swRecords.sum(),
+      srRecords.sum(), spill.sum(), input.sum())
   }
 
   /** Run `body`, return its result plus the fleet-wide task-metric totals

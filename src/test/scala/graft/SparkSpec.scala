@@ -3,23 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for every suite (forked test JVM). */
+/** One shared local session for every suite (forked test JVM): the
+  * graft.Session config at a fixed 4 threads, so results and the shuffle
+  * budgets specs pin do not depend on the machine's core count.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    // object-agg sort fallback stays at Spark's spill-safe default;
-    // bounded-buffer udafs get hash mode per-operator via the
-    // BoundedAggFallback query-stage prep rule (GraftExtensions)
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(cpus = 4, extra = Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -25,6 +25,17 @@ class RunMetricsSpec extends SparkSpec {
     assert(m.tasks > 0L, m)
   }
 
+  test("a collect counts its jobs and the task time behind them") {
+    // each of the 4 tasks sleeps, so task time cannot round to 0 ms
+    val (_, m) = RunMetrics.measure(spark) {
+      spark.range(0, 4, 1, 4).map { x => Thread.sleep(50); x.longValue }
+        .collect()
+    }
+    assert(m.jobs >= 1L, m)
+    assert(m.tasks >= 4L, m)
+    assert(m.taskSeconds >= 0.2, m)
+  }
+
   test("a groupBy shuffles at most one record per group per map partition") {
     // map-side partial aggregation: the exchange carries partial states,
     // never the input rows — 10k rows over 7 groups must shuffle far

@@ -161,7 +161,7 @@ class DrugDiseaseSpec extends SparkSpec {
     assert(ndWl("T1") == Seq("d1") && ndWl("T2") == null)
   }
 
-  test("aeSimilarity: empty profiles score null (no ANSI divide-by-zero crash)") {
+  test("scoreHypotheses: empty profiles score null (no ANSI divide-by-zero crash)") {
     val hyp = Seq(
       ("D1", "T1", Seq("d1"), Seq.empty[String]),    // empty disease profile
       ("D2", "T2", Seq("dEmpty"), Seq("a1"))         // empty drug profile

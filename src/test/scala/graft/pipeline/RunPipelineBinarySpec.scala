@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import graft.{RunPipeline, SparkSpec}
+import graft.schema.Schemas
+import graft.sources.Sources
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -96,6 +98,19 @@ class RunPipelineBinarySpec extends SparkSpec {
     }
   }
 
+  /** Runs the pipeline over `in` into a fresh dir; returns both sinks'
+    * rows, rendered and sorted.
+    */
+  private def sinks(in: String, whitelist: Option[String] = None)
+      : (Seq[String], Seq[String]) = {
+    val out = Files.createTempDirectory("graft-out-sinks").toString
+    RunPipeline.execute(spark, in, out, whitelist)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq.sorted
+    (rows(spark.read.parquet(s"$out/associations")),
+      rows(spark.read.json(s"$out/drug_disease")))
+  }
+
   test("open mode: binary writes associations parquet and drug_disease JSON") {
     val in = writeWorld()
     val out = Files.createTempDirectory("graft-out").toString
@@ -177,5 +192,54 @@ class RunPipelineBinarySpec extends SparkSpec {
         assert(Plans.scans(Plans.nodes(sink, cached = true))
           .count(_ == "evidences.json") == 1, sink)
     }
+  }
+
+  test("expression.json as a Spark JSON directory filters edges like the " +
+    "plain-file form") {
+    // T1 and T2 are active in different tissues, so the tissue filter drops
+    // the P1-P2 edge and nothing propagates to T2
+    val expression = Seq(
+      """{"gene":"T1","tissues":[{"efo_code":"UBERON_1","rna":{"zscore":1.0}}]}""",
+      """{"gene":"T2","tissues":[{"efo_code":"UBERON_2","rna":{"zscore":1.0}}]}""")
+    val none = writeWorld()
+    val file = writeWorld()
+    Files.writeString(java.nio.file.Paths.get(s"$file/expression.json"),
+      expression.mkString("\n"))
+    val dir = writeWorld()
+    Sources.writeJson(
+      spark.read.schema(Schemas.expression)
+        .json(s"$file/expression.json"),
+      s"$dir/expression.json")
+    assert(Files.isDirectory(java.nio.file.Paths.get(s"$dir/expression.json")))
+
+    val fromFile = sinks(file)
+    assert(sinks(dir) == fromFile)
+    assert(sinks(none) != fromFile)
+  }
+
+  test("a truncated line in every JSON input leaves both sinks unchanged, " +
+    "both modes") {
+    val clean = writeWorld()
+    val dirty = writeWorld()
+    // a write cut short: each input's first record, truncated mid-object
+    for ((name, schema) <- Seq("drugs" -> Schemas.drugs,
+        "targets" -> Schemas.targets, "diseases" -> Schemas.diseases,
+        "evidences" -> Schemas.evidences,
+        "interactions" -> Schemas.interactions,
+        "faers_by_drug" -> Schemas.faersByDrug,
+        "faers_by_target" -> Schemas.faersByTarget,
+        "aggregations" -> Schemas.aggregations)) {
+      val p = java.nio.file.Paths.get(s"$dirty/$name.json")
+      val first = Files.readAllLines(p).get(0)
+      Files.writeString(p, "\n" + first.take(first.length / 2),
+        java.nio.file.StandardOpenOption.APPEND)
+      // no Schemas.* type declares _corrupt_record, so the line reads back
+      // as one extra all-null row that the pipeline must not let through
+      val rows = Sources.json(spark, p.toString, schema).collect()
+      assert(rows.count(r => (0 until r.length).forall(r.isNullAt)) == 1, name)
+    }
+    for (whitelist <- Seq(None, Some("whitelist.json")))
+      assert(sinks(dirty, whitelist.map(w => s"$dirty/$w")) ==
+        sinks(clean, whitelist.map(w => s"$clean/$w")), whitelist)
   }
 }

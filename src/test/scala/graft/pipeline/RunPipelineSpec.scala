@@ -123,7 +123,7 @@ class RunPipelineSpec extends SparkSpec {
   test("whitelist mode: disease with no drugs survives to scoring without dividing by zero") {
     // D2 is whitelisted but has no aggregation row -> drugs_for_disease null
     // -> new_drugs null (kept: no size gate) -> explode drops it in scoring.
-    // Under ANSI this path crashed before the aeSimilarity guard.
+    // Under ANSI this path crashed before the aeContainment size guard.
     val wl = Seq(("W1", "D1"), ("W2", "D2")).toDF("whitelist_id", "disease_id")
     val evs = Seq(
       ("e1", "T1", "D1", 0.9, "europepmc"),
